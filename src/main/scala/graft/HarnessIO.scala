@@ -1,10 +1,9 @@
 package graft
 
 /** Tiny filesystem helpers shared by the measurement harnesses (Bench,
-  * Probe, Plans) — not part of the library API. One definition each so
-  * the live-tail protocol (hardlinked half-feeds, scratch teardown)
-  * cannot drift between harnesses (round-5 review: the same bodies were
-  * copy-pasted seven times across the three mains).
+  * Plans, perfbench) — not part of the library API. One definition each
+  * so the live-tail protocol (hardlinked half-feeds, scratch teardown)
+  * cannot drift between harnesses.
   */
 object HarnessIO {
 

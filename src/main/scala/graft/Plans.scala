@@ -2,7 +2,6 @@ package graft
 
 import graft.feed.{BinlogFeedGen, FeedReader}
 import graft.feed.BinlogFeedGen.FeedConfig
-import graft.merge.LwwDedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -104,18 +103,6 @@ object Plans {
       shape(decoded).join(winOff.hint("SHUFFLE_HASH"),
           graft.model.Offset.encExpr(col("_offset")) === col("_woff"), "leftsemi")
         .repartition(col("_bucket"))
-    }
-
-    section("Bucketed LWW reduction (library operator; merge-on-read twin)",
-      "The per-key max-offset fold GraftLake.read applies over base+delta " +
-      "buckets (and compaction folds amortized-rarely). Checks: ONE " +
-      "Exchange hashpartitioning(_bucket); the groupBy(_bucket, repo, path) " +
-      "max_by reuses that partitioning (no second exchange). The max_by " +
-      "packs full row images into its buffer, so this is a sort-based " +
-      "aggregate — the deliberate merge-on-read trade: reads pay a " +
-      "per-bucket sort so writes are O(batch) delta appends.") {
-      LwwDedup.dedupBucketed(shape(decoded.filter(!col("_noop"))),
-        offsetCol = "_offset")
     }
 
     // two-commit lake so the changelog window has real snapshot bounds

@@ -361,12 +361,16 @@ object Main {
       // exactly-once from Spark's own checkpoint
       // a silently-dropped typo is dangerous here: `clientid:x` for
       // `client:x` would run UNGATED against a registry-protected lake,
-      // `credits:4` would tail without flow control — reject unknown args
+      // `credits:4` would tail without flow control — reject unknown args,
+      // and bad numeric suffixes (`credit:x`, `bootstrapBuckets:0`) alike
+      def positive(t: String, prefix: String): Boolean = t.startsWith(prefix) &&
+        t.stripPrefix(prefix).toIntOption.exists(_ > 0)
       rest.foreach { t =>
-        val ok = t.nonEmpty && (t.forall(_.isDigit) || t == "bootstrap:none" ||
-          t.startsWith("client:") || t.startsWith("for:") ||
-          t.startsWith("cp:") || t.startsWith("credit:") ||
-          t.startsWith("bootstrapBuckets:"))
+        val ok = t.nonEmpty && (t.forall(_.isDigit) && t.toIntOption.nonEmpty ||
+          t == "bootstrap:none" || t.startsWith("client:") ||
+          t.startsWith("for:") && t.stripPrefix("for:").toLongOption.exists(_ > 0) ||
+          t.startsWith("cp:") || positive(t, "credit:") ||
+          positive(t, "bootstrapBuckets:"))
         if (!ok) sys.error(s"tail: unknown argument '$t' (expected [n] " +
           "[bootstrap:none] [client:<id>] [for:<ms>] [cp:<dir>] [credit:<k>] " +
           "[bootstrapBuckets:<k>])")

@@ -1,6 +1,6 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-batch last-writer-wins dedup: one surviving event per key, the one
@@ -17,65 +17,22 @@ import org.apache.spark.sql.functions._
   * `MaxBy` with struct ordering reproduces the reference comparator (struct
   * comparison is lexicographic by field: fileIdx, pos, rowIdx). Partial
   * aggregation (map-side combine) makes the shuffle carry at most one row
-  * per (key, input-partition) — already skew-resistant for moderate skew.
-  *
-  * For pathological hot keys (zipfian repos — SURVEY.md §4.3.3) the salted
-  * two-stage variant splits each key across `salt` reducers first, then
-  * reduces the per-salt winners; the salt source is the offset (unique per
-  * event), so salting is deterministic and uniform.
+  * per (key, input-partition), whatever the key skew.
   */
 object LwwDedup {
 
   /** Columns that identify a key — the MERGE key of the north rule. */
   val keyCols: Seq[String] = Seq("repo", "path")
 
-  /** Single-exchange bucketed variant (library operator; the batch-side
-    * twin of GraftLake.read's merge-on-read fold — the merge WRITE path
-    * itself selects winners by semi-join and never aggregates):
-    * repartitions by the precomputed `_bucket` column, then reduces per
-    * key WITHOUT a second exchange — `HashPartitioning(_bucket)` satisfies
-    * the aggregation's `ClusteredDistribution(_bucket, repo, path)`
-    * because the partitioning expressions are a subset of the grouping
-    * keys, and `_bucket` is a function of the key. The output stays
-    * partitioned by `_bucket`, so a bucket-directory write that follows
-    * needs no shuffle either. */
-  def dedupBucketed(events: DataFrame, offsetCol: String): DataFrame = {
-    val payload = events.columns
-      .filterNot(c => keyCols.contains(c) || c == "_bucket")
-    val packed = struct(payload.map(col).toSeq: _*)
-    events
-      .repartition(col("_bucket"))
-      .groupBy((col("_bucket") +: keyCols.map(col)): _*)
-      .agg(max_by(packed, col(offsetCol)).as("_e"))
-      .select((col("_bucket") +: keyCols.map(col)) ++
-        payload.map(c => col(s"_e.$c")): _*)
-  }
-
   /** events: one row per change event with top-level `repo`,`path`, an
     * offset struct column named `offsetCol`, plus arbitrary payload columns.
     * Returns one row per key (same schema). */
-  def dedup(events: DataFrame, salt: Int = 1,
-      offsetCol: String = "offset"): DataFrame = {
+  def dedup(events: DataFrame, offsetCol: String = "offset"): DataFrame = {
     val payload = events.columns.filterNot(keyCols.contains)
     val packed = struct(payload.map(col).toSeq: _*)
-    if (salt <= 1) {
-      events
-        .groupBy(keyCols.map(col): _*)
-        .agg(max_by(packed, col(offsetCol)).as("_e"))
-        .select(keyCols.map(col) ++ payload.map(c => col(s"_e.$c")): _*)
-    } else {
-      // stage 1: per-(key, salt) partial winner; stage 2: per-key final.
-      val saltCol: Column = pmod(
-        hash(col(s"$offsetCol.fileIdx"), col(s"$offsetCol.pos"),
-          col(s"$offsetCol.rowIdx")),
-        lit(salt))
-      val stage1 = events
-        .groupBy((keyCols.map(col) :+ saltCol.as("_salt")): _*)
-        .agg(max_by(packed, col(offsetCol)).as("_e"))
-      stage1
-        .groupBy(keyCols.map(col): _*)
-        .agg(max_by(col("_e"), col(s"_e.$offsetCol")).as("_e"))
-        .select(keyCols.map(col) ++ payload.map(c => col(s"_e.$c")): _*)
-    }
+    events
+      .groupBy(keyCols.map(col): _*)
+      .agg(max_by(packed, col(offsetCol)).as("_e"))
+      .select(keyCols.map(col) ++ payload.map(c => col(s"_e.$c")): _*)
   }
 }

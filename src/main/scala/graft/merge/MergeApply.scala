@@ -75,6 +75,63 @@ object MergeApply {
       rows: Long,
       compactMs: Long = 0)
 
+  /** Winner pre-selection is a LEFT SEMI join in BOTH regimes (the build
+    * side IS the cached winner aggregate): offsets are globally unique,
+    * so offset equality selects exactly the per-key winners.
+    *
+    * The join keys are the RAW offset segments (three longs), not the
+    * DECIMAL(38,0) encoding: segment-triple equality ⟺ encoding equality
+    * (the encoding is injective on guarded segments, and every batch row
+    * already went through the keyed scan's guarded encExpr, so range
+    * violations still hard-error before this join runs). Decoding the
+    * winner encodings back to segments costs three decimal ops on the ~1
+    * row/key build side; encoding the PROBE side — as earlier rounds did
+    * with `encExpr(offset) === _woff` — cost two BigDecimal multiplies
+    * plus adds per batch row (a measured ~7% of replay wall at 16M
+    * events, r06).
+    *  - broadcast: build ships to every executor; full images never
+    *    shuffle at all. Right when the key set fits executor memory.
+    *  - shuffle-hash (over broadcastKeyLimit): both sides hash-partition
+    *    on the segment triple — uniform by construction (triples are
+    *    unique, so no key skew is even possible) — and each partition
+    *    builds a hash table over only ITS slice. Images shuffle once,
+    *    nothing sorts. (The previous fallback, a bucketed max_by
+    *    reduction, sorted every shuffle partition of full images —
+    *    measured 9× slower at 16M events under a tight heap.)
+    * The single EQUI key is a 64-bit hash of the triple — one integral
+    * join key makes Spark build a LongHashedRelation (long→rows map)
+    * instead of the 24-byte-composite BytesToBytesMap a three-key join
+    * gets; at ~1M winner keys per batch the long-keyed build + probe
+    * measured ~0.45 s/batch faster at p16 (r06 abtest). Exactness does
+    * NOT ride on the hash: the segment equalities below are written as
+    * `probe − build = 0` so the planner keeps them as a residual join
+    * condition (a plain `probe === build` would be extracted as three
+    * more equi keys, recreating the composite map) — every hash match is
+    * re-checked on the raw segments, so a colliding non-winner can never
+    * slip through. No overflow risk in the subtraction: both operands
+    * passed the keyed scan's guarded encExpr, so they sit in [0, 2^42). */
+  private[graft] def winnerJoin(updates: DataFrame, winOff: DataFrame,
+      useBroadcast: Boolean): DataFrame = {
+    val seg = graft.model.Offset.SegBits // 42
+    val seg2 = s"CAST('${java.math.BigInteger.TWO.pow(2 * seg)}' AS DECIMAL(38,0))"
+    val seg1 = (1L << seg).toString
+    val winKeys = winOff
+      .select(
+        expr(s"_woff div $seg2").as("_wf"),
+        expr(s"(_woff % $seg2) div $seg1").as("_wp"),
+        expr(s"CAST(_woff % $seg1 AS BIGINT)").as("_wr"))
+      .select(xxhash64(col("_wf"), col("_wp"), col("_wr")).as("_wh"),
+        col("_wf"), col("_wp"), col("_wr"))
+    val probeCond =
+      xxhash64(col("offset.fileIdx"), col("offset.pos"),
+        col("offset.rowIdx")) === col("_wh") &&
+      (col("offset.fileIdx") - col("_wf")) === 0 &&
+      (col("offset.pos") - col("_wp")) === 0 &&
+      (col("offset.rowIdx") - col("_wr")) === 0
+    if (useBroadcast) updates.join(broadcast(winKeys), probeCond, "leftsemi")
+    else updates.join(winKeys.hint("SHUFFLE_HASH"), probeCond, "leftsemi")
+  }
+
   /** @param updates batch rows shaped as
     *   (repo, path, &lt;data cols of `schema`&gt;, offset struct, op).
     *   NOT no-op-filtered — the winner semi-join excludes no-ops for free
@@ -117,62 +174,7 @@ object MergeApply {
       .filterNot(LwwDedup.keyCols.contains)
     val bucket = GraftLake.bucketExpr(lake.nBuckets)
 
-    // Winner pre-selection is a LEFT SEMI join in BOTH regimes (the build
-    // side IS the cached winner aggregate): offsets are globally unique,
-    // so offset equality selects exactly the per-key winners.
-    //
-    // The join keys are the RAW offset segments (three longs), not the
-    // DECIMAL(38,0) encoding: segment-triple equality ⟺ encoding equality
-    // (the encoding is injective on guarded segments, and every batch row
-    // already went through the keyed scan's guarded encExpr, so range
-    // violations still hard-error before this join runs). Decoding the
-    // winner encodings back to segments costs three decimal ops on the ~1
-    // row/key build side; encoding the PROBE side — as earlier rounds did
-    // with `encExpr(offset) === _woff` — cost two BigDecimal multiplies
-    // plus adds per batch row (a measured ~7% of replay wall at 16M
-    // events, r06).
-    //  - broadcast: build ships to every executor; full images never
-    //    shuffle at all. Right when the key set fits executor memory.
-    //  - shuffle-hash (over broadcastKeyLimit): both sides hash-partition
-    //    on the segment triple — uniform by construction (triples are
-    //    unique, so no key skew is even possible) — and each partition
-    //    builds a hash table over only ITS slice. Images shuffle once,
-    //    nothing sorts. (The previous fallback, a bucketed max_by
-    //    reduction, sorted every shuffle partition of full images —
-    //    measured 9× slower at 16M events under a tight heap.)
-    // The single EQUI key is a 64-bit hash of the triple — one integral
-    // join key makes Spark build a LongHashedRelation (long→rows map)
-    // instead of the 24-byte-composite BytesToBytesMap a three-key join
-    // gets; at ~1M winner keys per batch the long-keyed build + probe
-    // measured ~0.45 s/batch faster at p16 (r06 abtest). Exactness does
-    // NOT ride on the hash: the segment equalities below are written as
-    // `probe − build = 0` so the planner keeps them as a residual join
-    // condition (a plain `probe === build` would be extracted as three
-    // more equi keys, recreating the composite map) — every hash match is
-    // re-checked on the raw segments, so a colliding non-winner can never
-    // slip through. No overflow risk in the subtraction: both operands
-    // passed the keyed scan's guarded encExpr, so they sit in [0, 2^42).
-    val seg = graft.model.Offset.SegBits // 42
-    val seg2 = s"CAST('${java.math.BigInteger.TWO.pow(2 * seg)}' AS DECIMAL(38,0))"
-    val seg1 = (1L << seg).toString
-    val winKeys = winOff
-      .select(
-        expr(s"_woff div $seg2").as("_wf"),
-        expr(s"(_woff % $seg2) div $seg1").as("_wp"),
-        expr(s"CAST(_woff % $seg1 AS BIGINT)").as("_wr"))
-      .select(xxhash64(col("_wf"), col("_wp"), col("_wr")).as("_wh"),
-        col("_wf"), col("_wp"), col("_wr"))
-    val probeCond =
-      xxhash64(col("offset.fileIdx"), col("offset.pos"),
-        col("offset.rowIdx")) === col("_wh") &&
-      (col("offset.fileIdx") - col("_wf")) === 0 &&
-      (col("offset.pos") - col("_wp")) === 0 &&
-      (col("offset.rowIdx") - col("_wr")) === 0
-    val preSelected =
-      if (useBroadcast)
-        updates.join(broadcast(winKeys), probeCond, "leftsemi")
-      else
-        updates.join(winKeys.hint("SHUFFLE_HASH"), probeCond, "leftsemi")
+    val preSelected = winnerJoin(updates, winOff, useBroadcast)
 
     val shaped = preSelected
       .select(

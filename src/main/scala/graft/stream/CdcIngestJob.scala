@@ -7,6 +7,10 @@ import graft.table.{GraftLake, SchemaEvolution}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Resume modes — the reference's offset negotiation (D8;
   * reference: server/akkaSystem/TableBinglogActor.java:95-116,
@@ -88,10 +92,6 @@ final case class IngestConfig(
     lakeRoot: String,
     checkpointDir: String,
     nBuckets: Int = 32,
-    /** LWW salt for the generic LwwDedup operator (kept so determinism
-      * tests can sweep it; the merge itself needs no salting — partial
-      * aggregation absorbs hot keys). */
-    salt: Int = 1,
     excludedCols: Set[String] = Set("commit"),
     acceptOps: Set[String] = Op.rowOps.toSet,
     maxFilesPerTrigger: Int = 8,
@@ -141,7 +141,6 @@ final case class BatchMetrics(
     affectedBuckets: Int,
     replayedSkip: Boolean,
     statsMs: Long = 0,
-    countMs: Long = 0,
     writeMs: Long = 0,
     commitMs: Long = 0,
     /** delta rows written this batch — in steady state ∝ batch size, NOT
@@ -334,9 +333,96 @@ object CdcIngestJob {
     applyTableBatch(spark, lake, cfg.specs.head, batch, batchId, fromPos,
       lineage = "", broadcastKeyLimit = cfg.broadcastKeyLimit)
 
+  /** Runs one phase; returns its result and its wall time in ms. */
+  private def timed[A](phase: => A): (A, Long) = {
+    val t0 = System.nanoTime()
+    val a = phase
+    (a, (System.nanoTime() - t0) / 1000000L)
+  }
+
+  /** One (micro)batch for one watched table: what every phase reads. */
+  private final case class TableBatch(spark: SparkSession, lake: GraftLake,
+      spec: TableSpec, snap: GraftLake.Snapshot, batch: DataFrame,
+      batchId: Long, fromPos: Option[Offset], lineage: String,
+      tombstoneHorizon: Option[Offset]) {
+
+    /** The batch bounded, filtered and decoded for this table — a fresh,
+      * uncached plan per call (see [[applyTableBatch]]). */
+    def decoded: DataFrame = {
+      val bounded = fromPos match {
+        // the struct comparison itself cannot push to parquet; its implied
+        // leaf-field bound on fileIdx can — row-group stats then skip
+        // every already-applied binlog file without reading data, which
+        // turns a resume-near-the-tip over a huge retained feed (and each
+        // streaming skip batch) into a metadata-only scan
+        case Some(o) => batch.filter(
+          col("offset.fileIdx") >= o.fileIdx && col("offset") > offsetLit(o))
+        case None => batch
+      }
+      val accepted = bounded.filter(
+        FeedReader.watched(spec.db, spec.table) &&
+          FeedReader.acceptOps(spec.acceptOps))
+      // F4: user predicate (Catalyst-compiled); DDL is control flow
+      val filtered = spec.filterSql match {
+        case Some(sql) => accepted.filter(col("op") === Op.Ddl || expr(sql))
+        case None => accepted
+      }
+      FeedReader.decode(filtered, spec.excludedCols)
+    }
+  }
+
+  /** The keyed stats scan's batch totals. */
+  private final case class KeyedStats(eventsIn: Long, watchedRows: Long,
+      noops: Long, winners: Long, applied: Long, maxOff: Option[Offset],
+      affected: Set[Int]) {
+    /** every decoded event is a row op or a DDL (the accept filter admits
+      * nothing else), so the DDL count is derived — one fewer conditional
+      * sum evaluated per event in the keyed scan */
+    def ddls: Long = eventsIn - watchedRows
+    /** batch events superseded by a same-key higher-offset event in the
+      * same batch (incl. re-delivered duplicate copies) — counted from the
+      * winner agg, NOT inferred from `applied` (which would misattribute
+      * already-applied re-deliveries — round-1 verdict) */
+    def dedupDrops: Long = watchedRows - noops - winners
+  }
+
+  /** The schema the batch merges against, after its DDLs. */
+  private final case class Evolved(schema: StructType,
+      schemas: Map[String, String], version: Int, changed: Boolean)
+
+  private type FoldResults = (MergeApply.CompactResult, MergeApply.CompactResult)
+
+  /** The speculative fold/split: its plan and its running jobs. */
+  private final case class Fold(plan: MergeApply.CompactionPlan,
+      run: Future[FoldResults])
+
+  /** Everything the commit and the batch metrics need. */
+  private final case class Merged(plan: MergeApply.CompactionPlan,
+      stats: KeyedStats, statsMs: Long, evolved: Evolved,
+      result: MergeApply.MergeResult, compacted: MergeApply.CompactResult,
+      split: MergeApply.CompactResult, willCommit: Boolean) {
+    def rowsWritten: Long = result.rowsPerBucket.values.sum
+
+    def metrics(batchId: Long, latencyMs: Long, commitMs: Long): BatchMetrics =
+      BatchMetrics(batchId, stats.eventsIn, stats.watchedRows, stats.noops,
+        stats.dedupDrops, stats.applied, stats.ddls, latencyMs,
+        result.affectedBuckets.size, replayedSkip = false,
+        statsMs = statsMs, writeMs = result.mergeMs, commitMs = commitMs,
+        rowsWritten = rowsWritten,
+        compactedBuckets = if (willCommit) plan.fold.size else 0,
+        compactMs =
+          if (willCommit) compacted.compactMs + split.compactMs else 0)
+  }
+
   /** Apply one (micro)batch for one watched table. Returns metrics;
     * replayed batchIds within the same checkpoint lineage are fenced and
     * no-op (exactly-once commit).
+    *
+    * Phases: fence/skip; then, timed together as `mergeLatencyMs`, the
+    * speculative fold kick, the keyed stats scan with the DDL fetch
+    * (`statsMs`), the schema fold, the update projection, the merge
+    * (`writeMs`) and the fold harvest; then the commit (`commitMs`). Every
+    * exit path logs its metrics.
     *
     * @param tombstoneHorizon the retained feed's minimum offset (the O3
     *   bound) — compaction physically drops `_deleted` winners below it,
@@ -351,22 +437,32 @@ object CdcIngestJob {
       batch: DataFrame, batchId: Long, fromPos: Option[Offset],
       lineage: String, broadcastKeyLimit: Long,
       tombstoneHorizon: Option[Offset] = None): BatchMetrics = {
-    val t0 = System.nanoTime()
     val snap = lake.latest().getOrElse(
       throw new IllegalStateException("lake not initialized"))
+    val b = TableBatch(spark, lake, spec, snap, batch, batchId, fromPos,
+      lineage, tombstoneHorizon)
+    val m = skipped(b).getOrElse {
+      val (merged, latencyMs) = timed(mergePhases(b, broadcastKeyLimit))
+      val (_, commitMs) = timed(if (merged.willCommit) commit(b, merged, latencyMs))
+      merged.metrics(batchId, latencyMs, commitMs)
+    }
+    // skips log too — `replayedSkip:true` lines are exactly what an
+    // operator audits after a crash-restart (round-5 review)
+    Metrics.append(lake.root, m)
+    m
+  }
+
+  /** Fence/skip phase: the metrics of a batch that must not run, else None. */
+  private def skipped(b: TableBatch): Option[BatchMetrics] = {
     // exactly-once fence — on (lineage, batchId), never batchId alone:
     // ids restart at 0 in a fresh checkpoint, so a bare `batchId` fence
     // would skip genuinely-new batches (data loss). Cross-lineage replays
     // are instead absorbed by the offset bound (resolveStart) plus the
     // merge's idempotence.
-    if (Option(snap.lineage).getOrElse("") == lineage && snap.batchId >= batchId) {
-      // log the fenced skip too — `replayedSkip:true` lines are exactly
-      // what an operator audits after a crash-restart (round-5 review)
-      val m = BatchMetrics(batchId, 0, 0, 0, 0, 0, 0, 0, 0, replayedSkip = true)
-      Metrics.append(lake.root, m)
-      return m
-    }
-
+    if (Option(b.snap.lineage).getOrElse("") == b.lineage &&
+        b.snap.batchId >= b.batchId)
+      return Some(BatchMetrics(b.batchId, 0, 0, 0, 0, 0, 0, 0, 0,
+        replayedSkip = true))
     // A batch whose every input file precedes the resume bound cannot
     // contribute a single event — and the binlog file index is embedded in
     // the feed's directory layout (`_file=fNNNNN[-replay]`), so that is
@@ -376,116 +472,117 @@ object CdcIngestJob {
     // already-applied file window the source re-delivers — at
     // maxFilesPerTrigger=4 over a 10^6-file retained feed that is days of
     // pure no-op batches before the first real event.
-    val allFilesBelowBound = fromPos.exists { o =>
+    val (below, skipMs) = timed(b.fromPos.exists { o =>
       try {
-        val files = batchFiles(batch)
+        val files = batchFiles(b.batch)
         files.nonEmpty && files.forall { p =>
           fileIdxRe.findFirstMatchIn(p).exists(_.group(1).toLong < o.fileIdx)
         }
       } catch { case _: Throwable => false } // unknown plan shape: scan
-    }
-    if (allFilesBelowBound) {
-      val m = BatchMetrics(batchId, 0, 0, 0, 0, 0, 0,
-        (System.nanoTime() - t0) / 1000000L, 0, replayedSkip = false)
-      Metrics.append(lake.root, m)
-      return m
-    }
+    })
+    if (below) Some(BatchMetrics(b.batchId, 0, 0, 0, 0, 0, 0, skipMs, 0,
+      replayedSkip = false))
+    else None
+  }
 
-    def decoded(src: DataFrame): DataFrame = {
-      val bounded = fromPos match {
-        // the struct comparison itself cannot push to parquet; its implied
-        // leaf-field bound on fileIdx can — row-group stats then skip
-        // every already-applied binlog file without reading data, which
-        // turns a resume-near-the-tip over a huge retained feed (and each
-        // streaming skip batch) into a metadata-only scan
-        case Some(o) => src.filter(
-          col("offset.fileIdx") >= o.fileIdx && col("offset") > offsetLit(o))
-        case None => src
-      }
-      val accepted = bounded.filter(
-        FeedReader.watched(spec.db, spec.table) &&
-          FeedReader.acceptOps(spec.acceptOps))
-      // F4: user predicate (Catalyst-compiled); DDL is control flow
-      val filtered = spec.filterSql match {
-        case Some(sql) => accepted.filter(col("op") === Op.Ddl || expr(sql))
-        case None => accepted
-      }
-      FeedReader.decode(filtered, spec.excludedCols)
-    }
+  /** The phases up to the commit: fold kick, keyed stats scan, DDL fetch,
+    * schema fold, projection, merge, fold harvest. */
+  private def mergePhases(b: TableBatch, broadcastKeyLimit: Long): Merged = {
+    val fold = kickFold(b) // before the keyed scan, so the two overlap
+    val keyed = keyedRows(b)
+    val (stats, statsMs, evolved, result) =
+      try {
+        val ((stats, ddls), statsMs) = timed {
+          val stats = scanStats(b, keyed)
+          (stats, fetchDdls(b, stats.ddls))
+        }
+        val evolved = evolveSchema(b, ddls)
+        val updates = projectUpdates(b, evolved.schema)
+        (stats, statsMs, evolved,
+          mergeWinners(b, keyed, stats, evolved, updates, broadcastKeyLimit))
+      } finally keyed.unpersist(false)
+    val willCommit =
+      result.affectedBuckets.nonEmpty || evolved.changed || stats.maxOff.isDefined
+    val (compacted, split) = harvestFold(b, fold, willCommit)
+    Merged(fold.plan, stats, statsMs, evolved, result, compacted, split,
+      willCommit)
+  }
 
-    // Fold/split PRE-EXISTING delta debt concurrently with the WHOLE batch
-    // pipeline (keyed stats scan + winner fetch + delta write). The plan's
-    // input is the PARENT snapshot's files only, so the pipelines touch
-    // disjoint file sets and any interleaving is safe; this batch's own
-    // deltas fold on a later commit (debt is bounded by one batch either
-    // way). Kicked SPECULATIVELY at batch start — before the stats scan
-    // says whether the batch will commit — because the fold's ~1-3s stage
-    // chain only fully hides when it overlaps the stats scan too (kicking
-    // it after the stats collect, as earlier rounds did, left it racing
-    // only the write and added its tail to every compacting batch). A
-    // batch that turns out to be a pure no-op discards the fold's
-    // uncommitted output files eagerly (lake.discardFiles below), so the
-    // no-fold-only-commit law (DeltaCompactionSpec) still holds
-    // observably. Under FIFO job scheduling the stats scan and the fold
-    // interleave at task granularity — the fold fills slots the chain's
-    // stage boundaries leave idle.
-    // `plan.split` is the L0→L1 tier for delta ranges wider than the fold
-    // budget (round-4 verdict #1) — fold and split touch disjoint files by
-    // construction, so both ride this commit. Fold output files are read
-    // with — and stamped as — the PARENT snapshot's schema version; a DDL
-    // arriving in this same batch just means the fold output carries the
-    // pre-DDL version, exactly as if it had folded one commit earlier
-    // (aligned reads upcast mixed versions).
-    val plan: MergeApply.CompactionPlan = {
-      val p = MergeApply.compactionPlan(snap.files, spec.compactFactor,
-        spec.maxDeltaFiles, spec.maxCompactBuckets)
-      // identical parent snapshot to a previously DISCARDED speculative
-      // fold => identical plan => don't churn; fold when something commits
+  /** Fold/split PRE-EXISTING delta debt concurrently with the WHOLE batch
+    * pipeline (keyed stats scan + winner fetch + delta write). The plan's
+    * input is the PARENT snapshot's files only, so the pipelines touch
+    * disjoint file sets and any interleaving is safe; this batch's own
+    * deltas fold on a later commit (debt is bounded by one batch either
+    * way). Kicked SPECULATIVELY at batch start — before the stats scan
+    * says whether the batch will commit — because the fold's ~1-3s stage
+    * chain only fully hides when it overlaps the stats scan too (kicking
+    * it after the stats collect, as earlier rounds did, left it racing
+    * only the write and added its tail to every compacting batch). A
+    * batch that turns out to be a pure no-op discards the fold's
+    * uncommitted output files eagerly ([[harvestFold]]), so the
+    * no-fold-only-commit law (DeltaCompactionSpec) still holds
+    * observably. Under FIFO job scheduling the stats scan and the fold
+    * interleave at task granularity — the fold fills slots the chain's
+    * stage boundaries leave idle.
+    *
+    * `plan.split` is the L0→L1 tier for delta ranges wider than the fold
+    * budget (round-4 verdict #1) — fold and split touch disjoint files by
+    * construction, so both ride this commit. Fold output files are read
+    * with — and stamped as — the PARENT snapshot's schema version; a DDL
+    * arriving in this same batch just means the fold output carries the
+    * pre-DDL version, exactly as if it had folded one commit earlier
+    * (aligned reads upcast mixed versions). */
+  private def kickFold(b: TableBatch): Fold = {
+    import b._
+    // identical parent snapshot to a previously DISCARDED speculative
+    // fold => identical plan => don't churn; fold when something commits
+    val plan =
       if (Option(discardedFoldAt.get(lake.root)).contains(snap.id))
         MergeApply.CompactionPlan.empty
-      else p
-    }
-    val due = plan.fold
-    val foldFut: scala.concurrent.Future[
-        (MergeApply.CompactResult, MergeApply.CompactResult)] =
-      if (plan.isEmpty)
-        scala.concurrent.Future.successful(
-          (MergeApply.CompactResult(Nil, Set.empty, 0L),
-            MergeApply.CompactResult(Nil, Set.empty, 0L)))
-      else scala.concurrent.Future {
+      else MergeApply.compactionPlan(snap.files, spec.compactFactor,
+        spec.maxDeltaFiles, spec.maxCompactBuckets)
+    val run =
+      if (plan.isEmpty) {
+        val none = MergeApply.CompactResult(Nil, Set.empty, 0L)
+        Future.successful((none, none))
+      } else Future {
         // runs on a non-Spark thread: local properties don't inherit
         spark.sparkContext.setJobDescription(s"graft b$batchId: fold/split")
         MergeApply.runPlan(spark, lake, snap, plan, batchId,
           spec.maxCompactBuckets, tombstoneHorizon)
-      }(scala.concurrent.ExecutionContext.global)
+      }(ExecutionContext.global)
+    Fold(plan, run)
+  }
 
-    // KEYED SCAN — ONE job over the batch computing, per (repo, path) key,
-    // the surviving-winner offset (the merge's build side) plus the
-    // row/noop/ddl tallies. This fuses the round-1 design's separate
-    // whole-batch planning scan and winner aggregate — two full feed
-    // scans — into one: per-key partial aggregation (map-side combine)
-    // bounds the shuffle at one ~80-byte row per (key, input partition)
-    // regardless of skew, and every global statistic the plan needs
-    // (affected buckets, counts, max offset, winner count) is then a
-    // sub-second re-aggregation over the cached per-key rows. Design notes:
-    //  - sum/max/bit_or are DeclarativeAggregates (codegen'd hash agg);
-    //    the bucket set is a bit_or bitmask, one long per 64 buckets.
-    //  - DDL events have null images, so they fold into the (null, null)
-    //    key group; their payloads are fetched by a stats-pruned scan only
-    //    when the counter says any exist.
-    //  - no Observations/CollectMetrics: inside `foreachBatch` the write
-    //    action's QueryExecutionListener event is swallowed by the
-    //    enclosing streaming execution, so `Observation.get` never resolves
-    //    there (verified empirically; batch-mode writes do).
-    val bucket = GraftLake.bucketExpr(lake.nBuckets)
-    val isRow = col("op").isin(Op.rowOps: _*)
+  private def isRow: Column = col("op").isin(Op.rowOps: _*)
+
+  /** KEYED SCAN — ONE job over the batch computing, per (repo, path) key,
+    * the surviving-winner offset (the merge's build side) plus the
+    * row/noop/ddl tallies. This fuses the round-1 design's separate
+    * whole-batch planning scan and winner aggregate — two full feed
+    * scans — into one: per-key partial aggregation (map-side combine)
+    * bounds the shuffle at one ~80-byte row per (key, input partition)
+    * regardless of skew, and every global statistic the plan needs
+    * (affected buckets, counts, max offset, winner count) is then a
+    * sub-second re-aggregation over the cached per-key rows
+    * ([[scanStats]]). Design notes:
+    *  - sum/max/bit_or are DeclarativeAggregates (codegen'd hash agg);
+    *    the bucket set is a bit_or bitmask, one long per 64 buckets.
+    *  - DDL events have null images, so they fold into the (null, null)
+    *    key group; their payloads are fetched by a stats-pruned scan only
+    *    when the counter says any exist.
+    *  - no Observations/CollectMetrics: inside `foreachBatch` the write
+    *    action's QueryExecutionListener event is swallowed by the
+    *    enclosing streaming execution, so `Observation.get` never resolves
+    *    there (verified empirically; batch-mode writes do).
+    * Returned persisted; the caller unpersists. */
+  private def keyedRows(b: TableBatch): DataFrame = {
     val surviving = isRow && !col("_noop")
-    val nWords = (lake.nBuckets + 63) / 64
     // offsets aggregate as their DECIMAL(38,0) encoding (Offset.encExpr):
     // max over a struct forces SortAggregate (sorts every scan partition by
     // key); max over a fixed-width decimal is a codegen'd HashAggregate.
     val offEnc = Offset.encExpr(col("offset"))
-    val keyed = decoded(batch)
+    b.decoded
       .groupBy("repo", "path")
       .agg(
         max(when(surviving, offEnc)).as("_woff"),
@@ -497,13 +594,20 @@ object CdcIngestJob {
         // maxOff is greatest(max(_woff), max(_nsoff)) at the re-aggregation
         max(when(!surviving, offEnc)).as("_nsoff"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The batch totals, re-aggregated from the persisted keyed rows — the
+    * job that runs the keyed scan. */
+  private def scanStats(b: TableBatch, keyed: DataFrame): KeyedStats = {
+    val bucket = GraftLake.bucketExpr(b.lake.nBuckets)
+    val nWords = (b.lake.nBuckets + 63) / 64
     // "applied" lineage metric = winners that advance past the pre-merge
     // lastOffset: a re-delivered duplicate of an already-applied event
     // keeps its old offset and so correctly counts as 0 applied. Computed
     // as one more aggregate column over the cached keyed rows — the
     // round-2 design re-read every newly written file's offset column per
     // batch, an extra job that grew with bucket (not batch) size.
-    val appliedAgg = snap.lastOffset.map(Offset.encode) match {
+    val appliedAgg = b.snap.lastOffset.map(Offset.encode) match {
       case Some(last) => count(when(col("_woff") > lit(last), true))
       case None => count(col("_woff"))
     }
@@ -517,7 +621,7 @@ object CdcIngestJob {
         .as(s"mask$w")
     }
     // job descriptions: free attribution in the Spark UI / listeners
-    spark.sparkContext.setJobDescription(s"graft b$batchId: keyed stats scan")
+    b.spark.sparkContext.setJobDescription(s"graft b${b.batchId}: keyed stats scan")
     val planRow = keyed.agg(
       coalesce(sum(col("_n")), lit(0L)).as("n"),
       (Seq(
@@ -528,118 +632,101 @@ object CdcIngestJob {
         appliedAgg.as("applied")
       ) ++ maskAggs): _*
     ).collect()(0)
-    def toOff(r: org.apache.spark.sql.Row): Offset =
-      Offset(r.getLong(0), r.getLong(1), r.getLong(2))
-    val eventsIn = planRow.getLong(0)
-    val watchedRows = planRow.getLong(1)
-    val maxOff = Option(planRow.get(2))
-      .map(d => Offset.decode(d.asInstanceOf[java.math.BigDecimal]))
-    val noops = planRow.getLong(3)
-    // every decoded event is a row op or a DDL (the accept filter admits
-    // nothing else), so the DDL count is derived — one fewer conditional
-    // sum evaluated per event in the keyed scan
-    val winners = planRow.getLong(4)
-    val applied = planRow.getLong(5)
-    val nDdl = eventsIn - watchedRows
     val affected: Set[Int] = (0 until nWords).flatMap { w =>
       val mask = planRow.getLong(6 + w)
-      (0 until 64).filter(b => (mask & (1L << b)) != 0).map(_ + w * 64)
+      (0 until 64).filter(bit => (mask & (1L << bit)) != 0).map(_ + w * 64)
     }.toSet
-    // rare path: fetch DDL payloads in stream order (op='DDL' prunes via
-    // parquet row-group stats, so DDL-free batches never pay a scan here).
-    // Re-delivered DDLs — offset at or below the lake's applied bound —
-    // are dropped HERE, the same LWW rule rows follow: they are already
-    // folded into the committed schema history, and filtering them is what
-    // lets the fold treat an `add` of a renamed-away name as the genuine
-    // re-add it is (a replayed pre-rename add can only arrive below the
-    // bound) instead of relying on shape-idempotence that conflates the
-    // two (round-5 review).
-    val ddls: Seq[DdlChange] =
-      if (nDdl == 0) Nil
-      else {
-        val fresh = snap.lastOffset.map(Offset.encode) match {
-          case Some(last) =>
-            decoded(batch).filter(col("op") === Op.Ddl &&
-              Offset.encExpr(col("offset")) > lit(last))
-          case None => decoded(batch).filter(col("op") === Op.Ddl)
-        }
-        val raw = fresh
-          .select(col("offset"), col("ddl"))
-          .collect()
-          .sortBy(r => toOff(r.getStruct(0)))
-          .map(_.getStruct(1))
-          .map(d => DdlChange(d.getString(0), d.getString(1), d.getString(2), d.getString(3)))
-        if (spec.camelize) // P3: source column names land camelCased
-          raw.map(d => d.copy(col = SchemaEvolution.snakeToCamel(d.col),
-            // a rename's TARGET name (toType) is a column name too
-            toType = if (d.kind == "rename_column")
-              SchemaEvolution.snakeToCamel(d.toType) else d.toType))
-        else raw.toSeq
+    KeyedStats(eventsIn = planRow.getLong(0), watchedRows = planRow.getLong(1),
+      noops = planRow.getLong(3), winners = planRow.getLong(4),
+      applied = planRow.getLong(5),
+      maxOff = Option(planRow.get(2))
+        .map(d => Offset.decode(d.asInstanceOf[java.math.BigDecimal])),
+      affected = affected)
+  }
+
+  /** Rare path: fetch DDL payloads in stream order (op='DDL' prunes via
+    * parquet row-group stats, so DDL-free batches never pay a scan here).
+    * Re-delivered DDLs — offset at or below the lake's applied bound —
+    * are dropped HERE, the same LWW rule rows follow: they are already
+    * folded into the committed schema history, and filtering them is what
+    * lets the fold treat an `add` of a renamed-away name as the genuine
+    * re-add it is (a replayed pre-rename add can only arrive below the
+    * bound) instead of relying on shape-idempotence that conflates the
+    * two (round-5 review). */
+  private def fetchDdls(b: TableBatch, nDdl: Long): Seq[DdlChange] =
+    if (nDdl == 0) Nil
+    else {
+      val isDdl = col("op") === Op.Ddl
+      val fresh = b.snap.lastOffset.map(Offset.encode) match {
+        case Some(last) =>
+          b.decoded.filter(isDdl && Offset.encExpr(col("offset")) > lit(last))
+        case None => b.decoded.filter(isDdl)
       }
-    val tStats = (System.nanoTime() - t0) / 1000000L
+      val raw = fresh
+        .select(col("offset"), col("ddl"))
+        .collect()
+        .sortBy { r =>
+          val o = r.getStruct(0); Offset(o.getLong(0), o.getLong(1), o.getLong(2))
+        }
+        .map(_.getStruct(1))
+        .map(d => DdlChange(d.getString(0), d.getString(1), d.getString(2), d.getString(3)))
+        .toSeq
+      if (b.spec.camelize) // P3: source column names land camelCased
+        raw.map(d => d.copy(col = SchemaEvolution.snakeToCamel(d.col),
+          // a rename's TARGET name (toType) is a column name too
+          toType = if (d.kind == "rename_column")
+            SchemaEvolution.snakeToCamel(d.toType) else d.toType))
+      else raw
+    }
 
-    // schema evolution resolved BEFORE the merge plan (SURVEY.md §4.4.7).
-    // Adds/widens are forward-compatible and drops/renames are resolved by
-    // field id at read time, so parsing the whole batch with the
-    // end-of-batch schema is equivalent to per-event catalog refresh.
-    // The version history anchors field-id minting (dropped ids never
-    // reused); it is parsed only when the batch actually carries DDLs.
-    val curSchema = lake.currentSchema(snap)
-    val newSchema = SchemaEvolution.fold(curSchema, ddls, snap.schemas.values)
-    val evolved = newSchema != curSchema
-    val (schemas, schemaVersion) =
-      if (evolved) (snap.schemas + ((snap.schemaVersion + 1).toString -> newSchema.json),
-        snap.schemaVersion + 1)
-      else (snap.schemas, snap.schemaVersion)
-    val snapForMerge = snap.copy(schemas = schemas, schemaVersion = schemaVersion)
+  /** Schema evolution resolved BEFORE the merge plan (SURVEY.md §4.4.7).
+    * Adds/widens are forward-compatible and drops/renames are resolved by
+    * field id at read time, so parsing the whole batch with the
+    * end-of-batch schema is equivalent to per-event catalog refresh.
+    * The version history anchors field-id minting (dropped ids never
+    * reused); it is parsed only when the batch actually carries DDLs. */
+  private def evolveSchema(b: TableBatch, ddls: Seq[DdlChange]): Evolved = {
+    val snap = b.snap
+    val cur = b.lake.currentSchema(snap)
+    val next = SchemaEvolution.fold(cur, ddls, snap.schemas.values)
+    if (next == cur) Evolved(cur, snap.schemas, snap.schemaVersion, changed = false)
+    else Evolved(next,
+      snap.schemas + ((snap.schemaVersion + 1).toString -> next.json),
+      snap.schemaVersion + 1, changed = true)
+  }
 
-    // The winner build side comes straight out of the cached keyed scan —
-    // no second aggregation job. The winner count (already collected above)
-    // is the exact dedup lineage metric AND the broadcast decision: winner
-    // offsets ship to every executor (full images never shuffle) only when
-    // the key set fits executor memory; past the limit the merge falls back
-    // to the direct shuffled LWW reduction (one image shuffle, zero
-    // broadcast state — the only safe shape at replay-scale cardinality).
-    val tCount0 = System.nanoTime()
-    val winOff: Option[DataFrame] =
-      if (winners == 0) None
-      else Some(keyed.filter(col("_woff").isNotNull).select(col("_woff")))
-    val tCount = (System.nanoTime() - tCount0) / 1000000L
-    val useBroadcast = winners <= broadcastKeyLimit
-
-    // project row events to merge shape against the (possibly evolved)
-    // schema. Each lake column decodes from its SOURCE-name candidates
-    // (current name, then rename aliases; snake forms under camelize —
-    // SchemaEvolution.sourceNames): a name that resolves to the canonical
-    // base payload reads the typed after-image field, anything else probes
-    // the extras map — so renamed base columns keep reading the image and
-    // events emitted before a rename keep decoding through the alias
-    // chain. NOT no-op-filtered: winners are fetched by globally-unique
-    // offset on BOTH merge paths and the build side excludes no-ops, so
-    // the semi-join drops them for free and this scan never evaluates the
-    // per-field image compare at all.
+  /** Project row events to merge shape against the (possibly evolved)
+    * schema. Each lake column decodes from its SOURCE-name candidates
+    * (current name, then rename aliases; snake forms under camelize —
+    * SchemaEvolution.sourceNames): a name that resolves to the canonical
+    * base payload reads the typed after-image field, anything else probes
+    * the extras map — so renamed base columns keep reading the image and
+    * events emitted before a rename keep decoding through the alias
+    * chain. NOT no-op-filtered: winners are fetched by globally-unique
+    * offset on BOTH merge paths and the build side excludes no-ops, so
+    * the semi-join drops them for free and this scan never evaluates the
+    * per-field image compare at all. */
+  private def projectUpdates(b: TableBatch, schema: StructType): DataFrame = {
+    val camelize = b.spec.camelize
     val baseSet = graft.model.Schemas.repoFile.fieldNames.toSet
     // a source name CLAIMED by a live column's own (primary) name must not
     // feed any OTHER column through an alias probe: after a genuine re-add
     // of a renamed-away name, events carry the NEW column's values under
     // that name, and the renamed column's alias would otherwise swallow
     // them (its alias chain stays for resolving OLD file versions only)
-    val claimedPrimary: Set[String] = SchemaEvolution.dataColumns(newSchema)
-      .flatMap(g => if (spec.camelize)
-        Seq(g.name, SchemaEvolution.camelToSnake(g.name)) else Seq(g.name))
-      .toSet
-    val updates = decoded(batch)
+    def own(name: String): Seq[String] =
+      if (camelize) Seq(name, SchemaEvolution.camelToSnake(name)) else Seq(name)
+    val claimedPrimary: Set[String] =
+      SchemaEvolution.dataColumns(schema).flatMap(g => own(g.name)).toSet
+    b.decoded
       .filter(isRow)
       .select(
         LwwDedup.keyCols.map(col) ++
-        SchemaEvolution.dataColumns(newSchema)
+        SchemaEvolution.dataColumns(schema)
           .filterNot(f => LwwDedup.keyCols.contains(f.name))
           .map { f =>
-            val own: Set[String] = Set(f.name) ++
-              (if (spec.camelize) Set(SchemaEvolution.camelToSnake(f.name))
-               else Set.empty[String])
-            val names = SchemaEvolution.sourceNames(f, spec.camelize)
-              .filterNot(n => !own(n) && claimedPrimary(n))
+            val names = SchemaEvolution.sourceNames(f, camelize)
+              .filterNot(n => !own(f.name).contains(n) && claimedPrimary(n))
             names.find(baseSet.contains) match {
               case Some(src) =>
                 col(s"after.$src").cast(f.dataType).as(f.name)
@@ -650,83 +737,81 @@ object CdcIngestJob {
             }
           } ++
         Seq(col("offset"), col("op")): _*)
-    spark.sparkContext.setJobDescription(s"graft b$batchId: merge write")
-    val result =
-      try MergeApply(spark, lake, snapForMerge, newSchema, updates,
-        winOff.orNull, winners, affected, batchId, useBroadcast)
-      finally keyed.unpersist(false)
+  }
 
-    // dedup drops = batch events superseded by a same-key higher-offset
-    // event in the same batch (incl. re-delivered duplicate copies) —
-    // counted from the winner agg, NOT inferred from `applied` (which
-    // would misattribute already-applied re-deliveries — round-1 verdict).
-    val dedupDrops = watchedRows - noops - winners
+  /** The winner build side comes straight out of the persisted keyed scan
+    * — no second aggregation job. The winner count (already collected) is
+    * the exact dedup lineage metric AND the broadcast decision: winner
+    * offsets ship to every executor (full images never shuffle) only when
+    * the key set fits executor memory; past the limit the merge falls back
+    * to the direct shuffled LWW reduction (one image shuffle, zero
+    * broadcast state — the only safe shape at replay-scale cardinality). */
+  private def mergeWinners(b: TableBatch, keyed: DataFrame, stats: KeyedStats,
+      evolved: Evolved, updates: DataFrame,
+      broadcastKeyLimit: Long): MergeApply.MergeResult = {
+    val winOff =
+      if (stats.winners == 0) null
+      else keyed.filter(col("_woff").isNotNull).select(col("_woff"))
+    val snapForMerge = b.snap.copy(
+      schemas = evolved.schemas, schemaVersion = evolved.version)
+    b.spark.sparkContext.setJobDescription(s"graft b${b.batchId}: merge write")
+    MergeApply(b.spark, b.lake, snapForMerge, evolved.schema, updates,
+      winOff, stats.winners, stats.affected, b.batchId,
+      useBroadcast = stats.winners <= broadcastKeyLimit)
+  }
 
-    // harvest the overlapped fold/split: their replacement files ride the
-    // SAME snapshot commit as the batch's deltas, so crash-atomicity is
-    // unchanged (a crash strands only uncommitted files, swept by vacuum)
-    val willCommit =
-      result.affectedBuckets.nonEmpty || evolved || maxOff.isDefined
-    val (compacted, splitRes) = scala.concurrent.Await.result(
-      foldFut, scala.concurrent.duration.Duration.Inf)
-    // a batch that turned out to be a pure no-op must leave NO trace: the
-    // speculative fold's output files are uncommitted (no snapshot ever
-    // references them), so eager deletion restores exactly the state a
-    // non-kicked fold would have left (DeltaCompactionSpec's no-fold-only-
-    // commit law). The debt stays and folds with the next real batch.
+  /** Harvest the overlapped fold/split: their replacement files ride the
+    * SAME snapshot commit as the batch's deltas, so crash-atomicity is
+    * unchanged (a crash strands only uncommitted files, swept by vacuum).
+    * A batch that turned out to be a pure no-op must leave NO trace: the
+    * speculative fold's output files are uncommitted (no snapshot ever
+    * references them), so eager deletion restores exactly the state a
+    * non-kicked fold would have left (DeltaCompactionSpec's no-fold-only-
+    * commit law). The debt stays and folds with the next real batch. */
+  private def harvestFold(b: TableBatch, fold: Fold,
+      willCommit: Boolean): FoldResults = {
+    val (compacted, split) = Await.result(fold.run, Duration.Inf)
     if (!willCommit) {
-      lake.discardFiles(compacted.files ++ splitRes.files)
-      discardedFoldAt.put(lake.root, snap.id)
-    } else discardedFoldAt.remove(lake.root)
+      b.lake.discardFiles(compacted.files ++ split.files)
+      discardedFoldAt.put(b.lake.root, b.snap.id)
+    } else discardedFoldAt.remove(b.lake.root)
+    (compacted, split)
+  }
+
+  /** Commit the batch's deltas and the harvested fold as one snapshot. */
+  private def commit(b: TableBatch, w: Merged, latencyMs: Long): Unit = {
+    import b.{lake, snap}
+    val s = w.stats
     // shared consumption rule (MergeApply.consumedBy): folded away only
     // when a file's WHOLE bucket range is due; split away exactly when the
     // split's own input selection (same fold budget) took it
-    val consumed = MergeApply.consumedBy(plan, spec.maxCompactBuckets) _
-    val nextFileList = snap.files.filterNot(consumed) ++
-      compacted.files ++ splitRes.files ++ result.newFiles
-
-    val latencyMs = (System.nanoTime() - t0) / 1000000L
-    val tCommit0 = System.nanoTime()
-
-    if (willCommit) {
-      val metrics: Map[String, Long] =
-        result.rowsPerBucket.map { case (b, n) => s"bucket.$b.rows" -> n } ++
-        Map("eventsIn" -> eventsIn, "watchedRows" -> watchedRows,
-          "noopDrops" -> noops, "dedupDrops" -> dedupDrops,
-          "applied" -> applied, "ddls" -> nDdl, "mergeLatencyMs" -> latencyMs,
-          "rowsWritten" -> result.rowsPerBucket.values.sum,
-          "compactedBuckets" -> due.size.toLong,
-          "compactedRows" -> compacted.rows,
-          "splitBuckets" -> splitRes.buckets.size.toLong,
-          "splitRows" -> splitRes.rows)
-      // the file-list delta is stamped here, where it is known exactly:
-      // commit then persists O(touched buckets) of manifest, never the
-      // full O(table) file list (round-3 verdict #1). removedPaths =
-      // exactly the parent-snapshot files the fold replaced, which is
-      // what drives incremental expiry GC.
-      val next = GraftLake.Snapshot(
-        id = snap.id + 1, batchId = batchId,
-        schemas = schemas, schemaVersion = schemaVersion,
-        files = nextFileList,
-        lastOffset = (maxOff.toSeq ++ snap.lastOffset.toSeq)
-          .sorted.lastOption,
-        metrics = metrics, parentId = snap.id, lineage = lineage,
-        nBuckets = lake.nBuckets,
-        addedFiles = result.newFiles ++ compacted.files ++ splitRes.files,
-        removedPaths = snap.files.filter(consumed).map(_.path))
-      lake.commit(next)
-      lake.expire(spec.expireKeep)
-    }
-    val m = BatchMetrics(batchId, eventsIn, watchedRows, noops,
-      dedupDrops, applied, nDdl, latencyMs,
-      result.affectedBuckets.size, replayedSkip = false,
-      statsMs = tStats, countMs = tCount, writeMs = result.mergeMs,
-      commitMs = (System.nanoTime() - tCommit0) / 1000000L,
-      rowsWritten = result.rowsPerBucket.values.sum,
-      compactedBuckets = if (willCommit) due.size else 0,
-      compactMs = if (willCommit) compacted.compactMs + splitRes.compactMs else 0)
-    Metrics.append(lake.root, m)
-    m
+    val consumed = MergeApply.consumedBy(w.plan, b.spec.maxCompactBuckets) _
+    val produced = w.compacted.files ++ w.split.files
+    val metrics: Map[String, Long] =
+      w.result.rowsPerBucket.map { case (k, n) => s"bucket.$k.rows" -> n } ++
+      Map("eventsIn" -> s.eventsIn, "watchedRows" -> s.watchedRows,
+        "noopDrops" -> s.noops, "dedupDrops" -> s.dedupDrops,
+        "applied" -> s.applied, "ddls" -> s.ddls, "mergeLatencyMs" -> latencyMs,
+        "rowsWritten" -> w.rowsWritten,
+        "compactedBuckets" -> w.plan.fold.size.toLong,
+        "compactedRows" -> w.compacted.rows,
+        "splitBuckets" -> w.split.buckets.size.toLong,
+        "splitRows" -> w.split.rows)
+    // the file-list delta is stamped here, where it is known exactly:
+    // commit then persists O(touched buckets) of manifest, never the
+    // full O(table) file list (round-3 verdict #1). removedPaths =
+    // exactly the parent-snapshot files the fold replaced, which is
+    // what drives incremental expiry GC.
+    lake.commit(GraftLake.Snapshot(
+      id = snap.id + 1, batchId = b.batchId,
+      schemas = w.evolved.schemas, schemaVersion = w.evolved.version,
+      files = snap.files.filterNot(consumed) ++ produced ++ w.result.newFiles,
+      lastOffset = (s.maxOff.toSeq ++ snap.lastOffset.toSeq).sorted.lastOption,
+      metrics = metrics, parentId = snap.id, lineage = b.lineage,
+      nBuckets = lake.nBuckets,
+      addedFiles = w.result.newFiles ++ produced,
+      removedPaths = snap.files.filter(consumed).map(_.path)))
+    lake.expire(b.spec.expireKeep)
   }
 
   /** Full replay / tail as a Structured Streaming job with checkpointed
@@ -793,8 +878,6 @@ object CdcIngestJob {
           // times (round-2 verdict #3); with the cache it is one feed
           // materialization + 2T cheap cached passes, and the per-spec
           // watched-table filters run over the cached rows.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
           import scala.concurrent.ExecutionContext.Implicits.global
           df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
@@ -931,7 +1014,8 @@ object CdcIngestJob {
       applyTableBatch(spark, lake, spec, feed, nextBatch, fromPos,
         lineage = "", cfg.broadcastKeyLimit, horizon)
     else {
-      val (lo, hi) = feedOffsetRange(spark, cfg.feedDir) match {
+      // no range: re-run the scan so the chunked path fails as before
+      val (lo, hi) = range.getOrElse(feedOffsetRange(spark, cfg.feedDir)) match {
         case (a, b) => (a.fileIdx, b.fileIdx)
       }
       var last: BatchMetrics = null

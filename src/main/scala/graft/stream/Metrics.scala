@@ -24,7 +24,7 @@ object Metrics {
       s""""dedupDrops":${m.dedupDrops},"applied":${m.applied},""" +
       s""""ddls":${m.ddls},"mergeLatencyMs":${m.mergeLatencyMs},""" +
       s""""affectedBuckets":${m.affectedBuckets},""" +
-      s""""statsMs":${m.statsMs},"countMs":${m.countMs},""" +
+      s""""statsMs":${m.statsMs},""" +
       s""""writeMs":${m.writeMs},"commitMs":${m.commitMs},""" +
       s""""rowsWritten":${m.rowsWritten},""" +
       s""""compactedBuckets":${m.compactedBuckets},""" +

@@ -9,7 +9,7 @@ import scala.util.Random
 
 /** Dedup/ordering property tests (SURVEY.md §5.2.2): random event
   * permutations and batch shapes → identical winners; max_by path ≡ window
-  * row_number path; salt-invariance. */
+  * row_number path. */
 /** top-level so Catalyst encoders/codegen see a public static class */
 final case class Ev(repo: String, path: String, payload: String,
     fileIdx: Long, pos: Long, rowIdx: Long)
@@ -47,21 +47,17 @@ class LwwDedupSpec extends SparkSuite {
     }
   }
 
-  test("salted two-stage ≡ unsalted ≡ window row_number formulation") {
+  test("max_by dedup ≡ window row_number formulation") {
     val evs = randomEvents(7L, 800, 25)
     val base = df(evs)
-    val unsalted = LwwDedup.dedup(base).orderBy("repo", "path").collect()
-    for (salt <- Seq(2, 8, 31)) {
-      val salted = LwwDedup.dedup(base, salt).orderBy("repo", "path").collect()
-      assert(salted.sameElements(unsalted), s"salt=$salt diverged")
-    }
+    val deduped = LwwDedup.dedup(base).orderBy("repo", "path").collect()
     // window cross-check (SURVEY.md §2.2): row_number over offset desc == 1
     val w = Window.partitionBy($"repo", $"path").orderBy($"offset".desc)
     val windowed = base.withColumn("rn", row_number().over(w))
       .filter($"rn" === 1).drop("rn")
       .select(base.columns.map(col).toSeq: _*)
       .orderBy("repo", "path").collect()
-    assert(windowed.sameElements(unsalted), "window formulation diverged")
+    assert(windowed.sameElements(deduped), "window formulation diverged")
   }
 
   test("duplicate events (same offset, same image) collapse to one winner") {
