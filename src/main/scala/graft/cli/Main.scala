@@ -26,9 +26,12 @@ import org.apache.spark.sql.functions._
   *   Main sync   <srcLake> <dstLake> [client:<id>] [follow:<pollMs>]
   *                                          // chain a lake off a lake
   *   Main tail   <lakeRoot> [n] [bootstrap:none] [client:<id>] [for:<ms>]
-  *               [cp:<dir>] [credit:<k>]  // live-follow the changelog
+  *               [cp:<dir>] [credit:<k>] [bootstrapBuckets:<k>]
+  *                           // live-follow the changelog
   *                           // STREAM (readStream format graft-changelog;
-  *                           // credit = max snapshots per micro-batch)
+  *                           // credit = max snapshots per micro-batch;
+  *                           // bootstrapBuckets = source buckets per
+  *                           // bootstrap micro-batch)
   *   Main describe <lakeRoot>               // schema history + debt views
   *   Main metrics <lakeRoot>
   *   Main vacuum <lakeRoot> [force]        // full orphan sweep (O(table));
@@ -91,6 +94,13 @@ object Main {
         s"$verb refused: writer '$h' holds a fresh lease on $lakeRoot — " +
           "stop the stream first or wait out the lease")
     }
+
+  /** `t` is `<prefix><n>` with `0 < n <= max` — a typo'd or unit-suffixed
+    * value (`credit:x`, `for:1s`) must fail at the boundary, not as a raw
+    * NumberFormatException inside a running session. */
+  private def positive(t: String, prefix: String,
+      max: Long = Int.MaxValue): Boolean =
+    t.startsWith(prefix) && t.stripPrefix(prefix).toLongOption.exists(n => n > 0 && n <= max)
 
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: feedDir :: n :: k :: rest =>
@@ -268,6 +278,10 @@ object Main {
       // feed:<dir> supplies the tombstone GC horizon (the retained feed's
       // minimum offset — the same O3 bound the streaming fold uses), so an
       // offline optimize can finally drop long-expired tombstones too.
+      rest0.filterNot(t => t.startsWith("feed:") || positive(t, "")).foreach { t =>
+        sys.error(s"optimize: unknown argument '$t' (expected " +
+          "[maxBucketsPerCommit > 0] [feed:<feedDir>])")
+      }
       val spark = session()
       val horizon = rest0.find(_.startsWith("feed:")).map { a =>
         CdcIngestJob.feedOffsetRange(spark, a.stripPrefix("feed:"))._1
@@ -331,7 +345,14 @@ object Main {
 
     case "sync" :: srcRoot :: dstRoot :: rest if rest.size <= 2 =>
       // lake→lake changelog subscription: apply the source's new snapshots
-      // into the destination (one commit per sync window, exactly-once)
+      // into the destination (one commit per sync window, exactly-once).
+      // As for `tail`: `clientid:x` must not sync UNGATED, `follow:1s`
+      // must not throw inside a running session
+      rest.filterNot(t => t.startsWith("client:") ||
+          positive(t, "follow:", Long.MaxValue)).foreach { t =>
+        sys.error(s"sync: unknown argument '$t' (expected [client:<id>] " +
+          "[follow:<pollMs>])")
+      }
       val spark = session()
       val clientId = rest.find(_.startsWith("client:")).map(_.stripPrefix("client:"))
       val pollMs = rest.find(_.startsWith("follow:")).map(_.stripPrefix("follow:").toLong)
@@ -363,12 +384,10 @@ object Main {
       // `client:x` would run UNGATED against a registry-protected lake,
       // `credits:4` would tail without flow control — reject unknown args,
       // and bad numeric suffixes (`credit:x`, `bootstrapBuckets:0`) alike
-      def positive(t: String, prefix: String): Boolean = t.startsWith(prefix) &&
-        t.stripPrefix(prefix).toIntOption.exists(_ > 0)
       rest.foreach { t =>
         val ok = t.nonEmpty && (t.forall(_.isDigit) && t.toIntOption.nonEmpty ||
           t == "bootstrap:none" || t.startsWith("client:") ||
-          t.startsWith("for:") && t.stripPrefix("for:").toLongOption.exists(_ > 0) ||
+          positive(t, "for:", Long.MaxValue) ||
           t.startsWith("cp:") || positive(t, "credit:") ||
           positive(t, "bootstrapBuckets:"))
         if (!ok) sys.error(s"tail: unknown argument '$t' (expected [n] " +
@@ -423,9 +442,14 @@ object Main {
       Describe.lines(lake, snap).foreach(l => println(s"[describe] $l"))
 
     case "metrics" :: lakeRoot :: Nil =>
-      val p = java.nio.file.Paths.get(lakeRoot, "_metrics.jsonl")
-      if (java.nio.file.Files.exists(p)) print(java.nio.file.Files.readString(p))
-      else println(s"no metrics at $p")
+      graft.stream.Metrics.logPath(lakeRoot) match {
+        case Some(p) if java.nio.file.Files.exists(p) =>
+          print(java.nio.file.Files.readString(p))
+        case Some(p) => println(s"no metrics at $p")
+        case None => println(s"no metrics log for $lakeRoot: the jsonl log " +
+          s"is local-only; every snapshot records its batch metrics — see " +
+          s"`log $lakeRoot`")
+      }
 
     case other =>
       System.err.println(s"unknown args: ${other.mkString(" ")}"); sys.exit(2)

@@ -72,8 +72,9 @@ object MergeApply {
   final case class CompactResult(
       files: Seq[GraftLake.FileEntry],
       buckets: Set[Int],
-      rows: Long,
-      compactMs: Long = 0)
+      compactMs: Long = 0) {
+    def rows: Long = files.map(_.rows).sum
+  }
 
   /** Winner pre-selection is a LEFT SEMI join in BOTH regimes (the build
     * side IS the cached winner aggregate): offsets are globally unique,
@@ -172,7 +173,6 @@ object MergeApply {
 
     val dataCols = SchemaEvolution.dataColumns(schema).map(_.name)
       .filterNot(LwwDedup.keyCols.contains)
-    val bucket = GraftLake.bucketExpr(lake.nBuckets)
 
     val preSelected = winnerJoin(updates, winOff, useBroadcast)
 
@@ -183,55 +183,60 @@ object MergeApply {
           .otherwise(col(c)).as(c)) ++
         Seq(col("offset").as("_offset"),
           (col("op") === Op.Delete).as("_deleted"))): _*)
-      .withColumn("_bucket", bucket)
 
-    // one winner-image exchange: repartition by bucket range inside
-    // writeData. Merge output is transient-coded (snappy): deltas are
-    // folded away by the next compaction of their bucket, and first-write
-    // bases get re-encoded with the dense session codec at their first
-    // fold — the per-microbatch encode is the hot path, compaction is the
-    // amortizer. Past 64 buckets the deltas are bucket-RANGE files
-    // (GraftLake.deltaRangeWidth): a per-bucket delta write costs
-    // O(nBuckets) files per microbatch — 4096+ tiny files per ~1s commit
-    // at the north rule's bucket counts — while ranges keep it
-    // O(nBuckets/width) with fold units still bounded (compactionDue
-    // folds whole ranges, so no file ever needs partial-fold tracking).
-    val width = GraftLake.deltaRangeWidth(lake.nBuckets)
-    // codec follows expected lifetime: a first write into an EMPTY table
-    // is a bulk load whose files become long-lived bases — dense codec;
-    // everything after is a delta the next fold re-encodes — snappy.
-    // `graft.merge.denseFirstLoad=false` flips the first-load choice to
-    // snappy for the bench's codec A/B (round-4 verdict #6: quantify what
-    // the bulk-replay path pays for long-lived zstd bases).
-    val denseFirstLoad =
-      sys.props.get("graft.merge.denseFirstLoad")
-        .orElse(sys.env.get("GRAFT_DENSE_FIRSTLOAD"))
-        .getOrElse("true").toBoolean
-    val files0 = lake.writeData(
-      shaped.select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
-      batchId,
-      transient_ = snap.files.nonEmpty || width > 1 || !denseFirstLoad,
-      rangeWidth = width)
-
-    // Base-vs-delta marking. A dup-free write (footer rows == distinct
-    // winners — no re-delivered copies of a winning event survived the
-    // semi-join) is per-key unique, so its files into an EMPTY bucket are
-    // base files (readers skip merge-on-read there); everything else is a
-    // delta. Range files (width > 1) are always deltas: a base file is
-    // per-bucket by construction, so a ranged first write into empty
-    // buckets just gets re-based by its first fold.
-    val rowsWritten = files0.map(_.rows).sum
-    val perKeyUnique = rowsWritten == winners
-    val bucketsWithData = snap.files.flatMap(_.bucketsCovered).toSet
-    val files = files0.map { f =>
-      f.copy(schemaVersion = snap.schemaVersion,
-        delta = !(width == 1 && perKeyUnique &&
-          !bucketsWithData.contains(f.bucket)))
-    }
+    // a dup-free write (footer rows == distinct winners — no re-delivered
+    // copies of a winning event survived the semi-join) is per-key unique
+    val files = writeFresh(lake, snap, schema, shaped, batchId,
+      perKeyUnique = _ == winners)
 
     MergeResult(files, affected,
       files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum },
       (System.nanoTime() - t0) / 1000000L)
+  }
+
+  /** The one write step for fresh rows — the merge's winners, a chained
+    * window or bootstrap chunk — as successor files of `parent`: bucket
+    * `rows`, shape them to `schema`, write them, and mark each file base or
+    * delta. One winner-image exchange: rows repartition by bucket range
+    * inside writeData. Past 64 buckets the files are bucket-RANGE files
+    * (GraftLake.deltaRangeWidth): a per-bucket delta write costs
+    * O(nBuckets) files per microbatch — 4096+ tiny files per ~1s commit at
+    * the north rule's bucket counts — while ranges keep it
+    * O(nBuckets/width) with fold units still bounded (compactionDue folds
+    * whole ranges, so no file ever needs partial-fold tracking).
+    *
+    * Codec follows expected lifetime: a first write into an EMPTY table is
+    * a bulk load whose files become long-lived bases — dense codec;
+    * everything after is a delta the next fold re-encodes — snappy (the
+    * per-write encode is the hot path, compaction is the amortizer).
+    * `graft.merge.denseFirstLoad=false` flips the first-load choice to
+    * snappy for the bench's codec A/B (round-4 verdict #6: quantify what
+    * the bulk-replay path pays for long-lived zstd bases).
+    *
+    * Base-vs-delta marking: when `perKeyUnique` holds for the write's row
+    * count, its files into buckets holding no `parent` file are base files
+    * (readers skip merge-on-read there); everything else is a delta. Range
+    * files (width > 1) are always deltas: a base file is per-bucket by
+    * construction, so a ranged first write into empty buckets just gets
+    * re-based by its first fold. Files carry `parent`'s schema version. */
+  private[graft] def writeFresh(lake: GraftLake, parent: GraftLake.Snapshot,
+      schema: StructType, rows: DataFrame, batchId: Long,
+      perKeyUnique: Long => Boolean): Seq[GraftLake.FileEntry] = {
+    val width = GraftLake.deltaRangeWidth(lake.nBuckets)
+    val denseFirstLoad =
+      sys.props.get("graft.merge.denseFirstLoad")
+        .orElse(sys.env.get("GRAFT_DENSE_FIRSTLOAD"))
+        .getOrElse("true").toBoolean
+    val files = lake.writeData(
+      rows.withColumn("_bucket", GraftLake.bucketExpr(lake.nBuckets))
+        .select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
+      batchId,
+      transient_ = parent.files.nonEmpty || width > 1 || !denseFirstLoad,
+      rangeWidth = width)
+    val unique = perKeyUnique(files.map(_.rows).sum)
+    val bucketsWithData = parent.files.flatMap(_.bucketsCovered).toSet
+    files.map(f => f.copy(schemaVersion = parent.schemaVersion,
+      delta = !(width == 1 && unique && !bucketsWithData(f.bucket))))
   }
 
   /** What compaction should do this commit: `fold` buckets get their
@@ -406,7 +411,7 @@ object MergeApply {
     val t0 = System.nanoTime()
     val (lo, hi) = range
     val inFiles = splitInput(candidate.files, range, foldBudget)
-    if (inFiles.isEmpty) return CompactResult(Nil, Set.empty, 0L)
+    if (inFiles.isEmpty) return CompactResult(Nil, Set.empty)
     val schema = lake.currentSchema(candidate)
     val subWidth = splitWidth(hi - lo + 1, foldBudget)
     val rows = lake.aligned(spark, candidate, inFiles).get
@@ -416,8 +421,7 @@ object MergeApply {
         .select((schema.fieldNames.map(col) :+ col("_bucket")).toSeq: _*),
       batchId, transient_ = true, rangeWidth = subWidth)
       .map(_.copy(schemaVersion = candidate.schemaVersion, delta = true))
-    CompactResult(files, (lo to hi).toSet, files.map(_.rows).sum,
-      (System.nanoTime() - t0) / 1000000L)
+    CompactResult(files, (lo to hi).toSet, (System.nanoTime() - t0) / 1000000L)
   }
 
   /** Fold the given buckets of `candidate`: per-key LWW winners across
@@ -451,7 +455,7 @@ object MergeApply {
       tombstoneHorizon: Option[graft.model.Offset] = None,
       clusterByKey: Boolean = false): CompactResult = {
     val t0 = System.nanoTime()
-    if (buckets.isEmpty) return CompactResult(Nil, Set.empty, 0L)
+    if (buckets.isEmpty) return CompactResult(Nil, Set.empty)
     val schema = lake.currentSchema(candidate)
     // read-with-merge over just these buckets = the fold operator itself
     val winners = lake
@@ -492,44 +496,48 @@ object MergeApply {
       batchId,
       sortCols = if (clusterByKey) LwwDedup.keyCols.map(col) else Nil)
       .map(_.copy(schemaVersion = candidate.schemaVersion, delta = false))
-    CompactResult(files, buckets, files.map(_.rows).sum,
-      (System.nanoTime() - t0) / 1000000L)
+    CompactResult(files, buckets, (System.nanoTime() - t0) / 1000000L)
+  }
+
+  /** A [[CompactionPlan]] executed against one snapshot: the fold and (at
+    * most one) split results, plus the rule for which parent files they
+    * consumed. The rule is bound to the SAME `foldBudget` the split ran
+    * with, so no caller can pair a split with a different budget's
+    * consumption test. */
+  final case class Compaction(plan: CompactionPlan, fold: CompactResult,
+      split: CompactResult, foldBudget: Int) {
+    /** Whether parent file `f` is replaced by [[produced]] (dropped from
+      * the next file list, recorded as removed): folded away only when its
+      * WHOLE bucket range is in the fold set — compactionPlan's cluster
+      * closure guarantees that for every overlapping file, so removal
+      * stays atomic — and split away exactly when [[splitInput]] selects
+      * it under the budget the split ran with. */
+    def consumed(f: GraftLake.FileEntry): Boolean =
+      f.bucketsCovered.forall(plan.fold.contains) ||
+        plan.split.exists(r => splitInput(Seq(f), r, foldBudget).nonEmpty)
+    def produced: Seq[GraftLake.FileEntry] = fold.files ++ split.files
+    /** rows rewritten by the fold and the split together */
+    def rows: Long = fold.rows + split.rows
+    def compactMs: Long = fold.compactMs + split.compactMs
   }
 
   /** Execute a [[CompactionPlan]] against `snap`'s files: the fold and (at
-    * most one) split, which touch disjoint files by construction. Paired
-    * with [[consumedBy]] under the SAME `foldBudget` — the ingest batch,
-    * the changelog chain and the offline optimize all run this exact
-    * sequence, and the consumption rule must always match the budget the
-    * split ran with (the coupling lives here so the three call sites
-    * cannot drift). */
+    * most one) split, which touch disjoint files by construction. The
+    * ingest batch, the changelog chain and the offline optimize all run
+    * this exact sequence and commit its [[Compaction.produced]] files in
+    * place of the [[Compaction.consumed]] ones. */
   def runPlan(spark: SparkSession, lake: GraftLake,
       snap: GraftLake.Snapshot, plan: CompactionPlan, batchId: Long,
       foldBudget: Int,
       tombstoneHorizon: Option[graft.model.Offset] = None,
-      clusterByKey: Boolean = false): (CompactResult, CompactResult) = {
+      clusterByKey: Boolean = false): Compaction = {
     if (!plan.isEmpty) planRuns.incrementAndGet()
-    val fold =
-      if (plan.fold.isEmpty) CompactResult(Nil, Set.empty, 0L)
-      else compact(spark, lake, snap, plan.fold, batchId, tombstoneHorizon,
-        clusterByKey)
-    val split = plan.split match {
-      case Some(r) => splitDeltas(spark, lake, snap, r, batchId, foldBudget)
-      case None => CompactResult(Nil, Set.empty, 0L)
-    }
-    (fold, split)
+    val fold = compact(spark, lake, snap, plan.fold, batchId,
+      tombstoneHorizon, clusterByKey)
+    val split = plan.split.map(splitDeltas(spark, lake, snap, _, batchId,
+      foldBudget)).getOrElse(CompactResult(Nil, Set.empty))
+    Compaction(plan, fold, split, foldBudget)
   }
-
-  /** The parent-snapshot files `plan` consumed (to be dropped from the
-    * next file list / recorded as removedPaths): folded away only when the
-    * file's WHOLE bucket range is in the fold set — compactionPlan's
-    * cluster closure guarantees that for every overlapping file, so
-    * removal stays atomic — and split away exactly when [[splitInput]]
-    * selects it under the same `foldBudget` the split ran with. */
-  def consumedBy(plan: CompactionPlan, foldBudget: Int)(
-      f: GraftLake.FileEntry): Boolean =
-    f.bucketsCovered.forall(plan.fold.contains) ||
-      plan.split.exists(r => splitInput(Seq(f), r, foldBudget).nonEmpty)
 
   /** Count of non-empty [[runPlan]] executions — observability hook (the
     * [[GraftLake.metaOps]] pattern) so tests can pin that a DISCARDED
@@ -584,6 +592,10 @@ object MergeApply {
   def optimize(spark: SparkSession, lake: GraftLake,
       maxBucketsPerCommit: Int = 64,
       tombstoneHorizon: Option[graft.model.Offset] = None): OptimizeResult = {
+    // budget 0 classes every delta as wide and splits it to width 1 — a
+    // rewrite of the same deltas per commit that never drains
+    require(maxBucketsPerCommit >= 1,
+      s"optimize: maxBucketsPerCommit must be >= 1, got $maxBucketsPerCommit")
     var commits = 0
     var foldedBuckets = 0L
     var splitFiles = 0L
@@ -608,22 +620,16 @@ object MergeApply {
         if (plan.isEmpty)
           return OptimizeResult(commits, foldedBuckets, splitFiles,
             rowsRewritten)
-        val (fold, split) = runPlan(spark, lake, snap, plan, snap.batchId,
+        val c = runPlan(spark, lake, snap, plan, snap.batchId,
           maxBucketsPerCommit, tombstoneHorizon, clusterByKey = true)
-        val consumed = consumedBy(plan, maxBucketsPerCommit) _
-        lake.commit(snap.copy(
-          id = snap.id + 1, parentId = snap.id,
-          files = snap.files.filterNot(consumed) ++ fold.files ++ split.files,
-          metrics = Map(
-            "rowsWritten" -> (fold.rows + split.rows),
-            "compactedBuckets" -> plan.fold.size.toLong,
-            "splitBuckets" -> split.buckets.size.toLong),
-          addedFiles = fold.files ++ split.files,
-          removedPaths = snap.files.filter(consumed).map(_.path)))
+        lake.commit(snap.next(c.produced, c.consumed, Map(
+          "rowsWritten" -> c.rows,
+          "compactedBuckets" -> plan.fold.size.toLong,
+          "splitBuckets" -> c.split.buckets.size.toLong)))
         commits += 1
         foldedBuckets += plan.fold.size
-        splitFiles += split.files.size
-        rowsRewritten += fold.rows + split.rows
+        splitFiles += c.split.files.size
+        rowsRewritten += c.rows
       }
       throw new IllegalStateException("unreachable")
     } finally lake.releaseLease(leaseHolder)

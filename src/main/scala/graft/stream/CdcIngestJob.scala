@@ -390,17 +390,10 @@ object CdcIngestJob {
   private final case class Evolved(schema: StructType,
       schemas: Map[String, String], version: Int, changed: Boolean)
 
-  private type FoldResults = (MergeApply.CompactResult, MergeApply.CompactResult)
-
-  /** The speculative fold/split: its plan and its running jobs. */
-  private final case class Fold(plan: MergeApply.CompactionPlan,
-      run: Future[FoldResults])
-
   /** Everything the commit and the batch metrics need. */
-  private final case class Merged(plan: MergeApply.CompactionPlan,
-      stats: KeyedStats, statsMs: Long, evolved: Evolved,
-      result: MergeApply.MergeResult, compacted: MergeApply.CompactResult,
-      split: MergeApply.CompactResult, willCommit: Boolean) {
+  private final case class Merged(stats: KeyedStats, statsMs: Long,
+      evolved: Evolved, result: MergeApply.MergeResult,
+      compaction: MergeApply.Compaction, willCommit: Boolean) {
     def rowsWritten: Long = result.rowsPerBucket.values.sum
 
     def metrics(batchId: Long, latencyMs: Long, commitMs: Long): BatchMetrics =
@@ -409,9 +402,8 @@ object CdcIngestJob {
         result.affectedBuckets.size, replayedSkip = false,
         statsMs = statsMs, writeMs = result.mergeMs, commitMs = commitMs,
         rowsWritten = rowsWritten,
-        compactedBuckets = if (willCommit) plan.fold.size else 0,
-        compactMs =
-          if (willCommit) compacted.compactMs + split.compactMs else 0)
+        compactedBuckets = if (willCommit) compaction.plan.fold.size else 0,
+        compactMs = if (willCommit) compaction.compactMs else 0)
   }
 
   /** Apply one (micro)batch for one watched table. Returns metrics;
@@ -503,8 +495,7 @@ object CdcIngestJob {
       } finally keyed.unpersist(false)
     val willCommit =
       result.affectedBuckets.nonEmpty || evolved.changed || stats.maxOff.isDefined
-    val (compacted, split) = harvestFold(b, fold, willCommit)
-    Merged(fold.plan, stats, statsMs, evolved, result, compacted, split,
+    Merged(stats, statsMs, evolved, result, harvestFold(b, fold, willCommit),
       willCommit)
   }
 
@@ -532,7 +523,7 @@ object CdcIngestJob {
     * arriving in this same batch just means the fold output carries the
     * pre-DDL version, exactly as if it had folded one commit earlier
     * (aligned reads upcast mixed versions). */
-  private def kickFold(b: TableBatch): Fold = {
+  private def kickFold(b: TableBatch): Future[MergeApply.Compaction] = {
     import b._
     // identical parent snapshot to a previously DISCARDED speculative
     // fold => identical plan => don't churn; fold when something commits
@@ -541,17 +532,14 @@ object CdcIngestJob {
         MergeApply.CompactionPlan.empty
       else MergeApply.compactionPlan(snap.files, spec.compactFactor,
         spec.maxDeltaFiles, spec.maxCompactBuckets)
-    val run =
-      if (plan.isEmpty) {
-        val none = MergeApply.CompactResult(Nil, Set.empty, 0L)
-        Future.successful((none, none))
-      } else Future {
-        // runs on a non-Spark thread: local properties don't inherit
-        spark.sparkContext.setJobDescription(s"graft b$batchId: fold/split")
-        MergeApply.runPlan(spark, lake, snap, plan, batchId,
-          spec.maxCompactBuckets, tombstoneHorizon)
-      }(ExecutionContext.global)
-    Fold(plan, run)
+    def run = MergeApply.runPlan(spark, lake, snap, plan, batchId,
+      spec.maxCompactBuckets, tombstoneHorizon)
+    if (plan.isEmpty) Future.successful(run) // no Spark work to overlap
+    else Future {
+      // runs on a non-Spark thread: local properties don't inherit
+      spark.sparkContext.setJobDescription(s"graft b$batchId: fold/split")
+      run
+    }(ExecutionContext.global)
   }
 
   private def isRow: Column = col("op").isin(Op.rowOps: _*)
@@ -768,49 +756,39 @@ object CdcIngestJob {
     * references them), so eager deletion restores exactly the state a
     * non-kicked fold would have left (DeltaCompactionSpec's no-fold-only-
     * commit law). The debt stays and folds with the next real batch. */
-  private def harvestFold(b: TableBatch, fold: Fold,
-      willCommit: Boolean): FoldResults = {
-    val (compacted, split) = Await.result(fold.run, Duration.Inf)
+  private def harvestFold(b: TableBatch, fold: Future[MergeApply.Compaction],
+      willCommit: Boolean): MergeApply.Compaction = {
+    val c = Await.result(fold, Duration.Inf)
     if (!willCommit) {
-      b.lake.discardFiles(compacted.files ++ split.files)
+      b.lake.discardFiles(c.produced)
       discardedFoldAt.put(b.lake.root, b.snap.id)
     } else discardedFoldAt.remove(b.lake.root)
-    (compacted, split)
+    c
   }
 
   /** Commit the batch's deltas and the harvested fold as one snapshot. */
   private def commit(b: TableBatch, w: Merged, latencyMs: Long): Unit = {
     import b.{lake, snap}
     val s = w.stats
-    // shared consumption rule (MergeApply.consumedBy): folded away only
-    // when a file's WHOLE bucket range is due; split away exactly when the
-    // split's own input selection (same fold budget) took it
-    val consumed = MergeApply.consumedBy(w.plan, b.spec.maxCompactBuckets) _
-    val produced = w.compacted.files ++ w.split.files
+    val c = w.compaction
     val metrics: Map[String, Long] =
       w.result.rowsPerBucket.map { case (k, n) => s"bucket.$k.rows" -> n } ++
       Map("eventsIn" -> s.eventsIn, "watchedRows" -> s.watchedRows,
         "noopDrops" -> s.noops, "dedupDrops" -> s.dedupDrops,
         "applied" -> s.applied, "ddls" -> s.ddls, "mergeLatencyMs" -> latencyMs,
         "rowsWritten" -> w.rowsWritten,
-        "compactedBuckets" -> w.plan.fold.size.toLong,
-        "compactedRows" -> w.compacted.rows,
-        "splitBuckets" -> w.split.buckets.size.toLong,
-        "splitRows" -> w.split.rows)
+        "compactedBuckets" -> c.plan.fold.size.toLong,
+        "compactedRows" -> c.fold.rows,
+        "splitBuckets" -> c.split.buckets.size.toLong,
+        "splitRows" -> c.split.rows)
     // the file-list delta is stamped here, where it is known exactly:
     // commit then persists O(touched buckets) of manifest, never the
-    // full O(table) file list (round-3 verdict #1). removedPaths =
-    // exactly the parent-snapshot files the fold replaced, which is
-    // what drives incremental expiry GC.
-    lake.commit(GraftLake.Snapshot(
-      id = snap.id + 1, batchId = b.batchId,
-      schemas = w.evolved.schemas, schemaVersion = w.evolved.version,
-      files = snap.files.filterNot(consumed) ++ produced ++ w.result.newFiles,
-      lastOffset = (s.maxOff.toSeq ++ snap.lastOffset.toSeq).sorted.lastOption,
-      metrics = metrics, parentId = snap.id, lineage = b.lineage,
-      nBuckets = lake.nBuckets,
-      addedFiles = w.result.newFiles ++ produced,
-      removedPaths = snap.files.filter(consumed).map(_.path)))
+    // full O(table) file list (round-3 verdict #1)
+    lake.commit(snap.next(c.produced ++ w.result.newFiles, c.consumed, metrics)
+      .copy(batchId = b.batchId,
+        schemas = w.evolved.schemas, schemaVersion = w.evolved.version,
+        lastOffset = (s.maxOff.toSeq ++ snap.lastOffset.toSeq).sorted.lastOption,
+        lineage = b.lineage, nBuckets = lake.nBuckets))
     lake.expire(b.spec.expireKeep)
   }
 

@@ -1,6 +1,9 @@
 package graft.stream
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 /** Per-microbatch lineage/metrics log (north rule: "per-partition
   * lineage/metrics (events applied, dedup drops, merge latency) emitted per
@@ -11,26 +14,22 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * the Hadoop local checksum FS does not support appends), skipped for
   * non-local lake roots. */
 object Metrics {
-  def append(lakeRoot: String, m: BatchMetrics): Unit = synchronized {
-    val rootPath =
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** The jsonl log of a local lake root (plain or `file:` URI); None for
+    * any other scheme, whose per-batch record is the snapshot only. */
+  def logPath(lakeRoot: String): Option[Path] = {
+    val root =
       if (lakeRoot.startsWith("file:"))
-        Paths.get(java.net.URI.create(lakeRoot).getPath)
-      else if (lakeRoot.contains(":/")) null // non-local scheme: snapshot only
-      else Paths.get(lakeRoot)
-    if (rootPath == null) return
-    val line =
-      s"""{"batchId":${m.batchId},"eventsIn":${m.eventsIn},""" +
-      s""""watchedRows":${m.watchedRows},"noopDrops":${m.noopDrops},""" +
-      s""""dedupDrops":${m.dedupDrops},"applied":${m.applied},""" +
-      s""""ddls":${m.ddls},"mergeLatencyMs":${m.mergeLatencyMs},""" +
-      s""""affectedBuckets":${m.affectedBuckets},""" +
-      s""""statsMs":${m.statsMs},""" +
-      s""""writeMs":${m.writeMs},"commitMs":${m.commitMs},""" +
-      s""""rowsWritten":${m.rowsWritten},""" +
-      s""""compactedBuckets":${m.compactedBuckets},""" +
-      s""""compactMs":${m.compactMs},""" +
-      s""""replayedSkip":${m.replayedSkip}}""" + "\n"
-    Files.writeString(rootPath.resolve("_metrics.jsonl"), line,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        Some(Paths.get(java.net.URI.create(lakeRoot).getPath))
+      else if (lakeRoot.contains(":/")) None
+      else Some(Paths.get(lakeRoot))
+    root.map(_.resolve("_metrics.jsonl"))
+  }
+
+  def append(lakeRoot: String, m: BatchMetrics): Unit = synchronized {
+    logPath(lakeRoot).foreach(p =>
+      Files.writeString(p, mapper.writeValueAsString(m) + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND))
   }
 }

@@ -164,6 +164,20 @@ object GraftLake {
     def added: Seq[FileEntry] = Option(addedFiles).getOrElse(Nil)
     def removed: Seq[String] = Option(removedPaths).getOrElse(Nil)
     def segs: Seq[SegmentRef] = Option(segments).getOrElse(Nil)
+
+    /** The successor snapshot a writer commits: the files `consumed`
+      * selects leave, `added` files join, and `addedFiles`/`removedPaths`
+      * record exactly that difference — the invariant [[GraftLake.expire]]
+      * GC and [[GraftLake.changesBetween]] rely on, kept here for every
+      * writer. Everything else (batchId, schemas, lastOffset, lineage,
+      * nBuckets) carries over; `metrics` are per commit. */
+    def next(added: Seq[FileEntry], consumed: FileEntry => Boolean,
+        metrics: Map[String, Long]): Snapshot = {
+      val (gone, kept) = files.partition(consumed)
+      copy(id = id + 1, parentId = id, files = kept ++ added,
+        metrics = metrics, incremental = false, addedFiles = added,
+        removedPaths = gone.map(_.path), segments = Nil)
+    }
   }
 
   private val mapper = new ObjectMapper()
@@ -575,7 +589,7 @@ final class GraftLake(val root: String, val nBuckets: Int,
   /** Apply one incremental snapshot over its reconstructed base — THE
     * chain-application invariant, shared by [[reconstruct]] and expire's
     * anchor derivation so the two can never drift (the same reason
-    * MergeApply centralizes consumedBy). */
+    * MergeApply.Compaction owns its consumption rule). */
   private def applyDelta(base: Snapshot, delta: Snapshot): Snapshot = {
     val removed = delta.removed.toSet
     delta.copy(incremental = false, segments = Nil,
@@ -729,13 +743,10 @@ final class GraftLake(val root: String, val nBuckets: Int,
         .withColumn("_bucket", GraftLake.bucketExpr(newN))
       val files = writeData(rows, batchId = snap.batchId, rangeWidth = 1)
         .map(_.copy(schemaVersion = snap.schemaVersion, delta = false))
-      commit(snap.copy(
-        id = snap.id + 1, parentId = snap.id, nBuckets = newN,
-        files = files, addedFiles = files,
-        removedPaths = snap.files.map(_.path),
+      commit(snap.next(files, consumed = _ => true,
         metrics = Map("rebucketFrom" -> oldN.toLong,
           "rebucketTo" -> newN.toLong,
-          "rowsWritten" -> files.map(_.rows).sum)))
+          "rowsWritten" -> files.map(_.rows).sum)).copy(nBuckets = newN))
     } finally releaseLease(leaseHolder)
   }
 

@@ -88,4 +88,29 @@ class MetricsSpec extends SparkSuite {
     assert(m3.applied == 0, s"re-replay applied ${m3.applied} rows")
     assert(m3.dedupDrops == rows - noops - winners)
   }
+
+  test("the metrics verb reads the log a file: root's batches were " +
+    "appended to, and names `log` for non-local roots") {
+    import graft.stream.{BatchMetrics, Metrics}
+    val dir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(tmp("uriLake")))
+    val root = dir.toUri.toString // file:///…/uriLake/
+    Metrics.append(root, BatchMetrics(7L, 10L, 9L, 1L, 2L, 6L, 1L, 5L, 3,
+      replayedSkip = false))
+    def verb(r: String): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(graft.cli.Main.main(Array("metrics", r)))
+      out.toString("UTF-8")
+    }
+    val line = verb(root).trim
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    import scala.jdk.CollectionConverters._
+    assert(json.fieldNames().asScala.toSet == Set("batchId", "eventsIn",
+      "watchedRows", "noopDrops", "dedupDrops", "applied", "ddls",
+      "mergeLatencyMs", "affectedBuckets", "statsMs", "writeMs", "commitMs",
+      "rowsWritten", "compactedBuckets", "compactMs", "replayedSkip"), line)
+    assert(json.get("batchId").asLong == 7L && json.get("applied").asLong == 6L &&
+      !json.get("replayedSkip").asBoolean, line)
+    assert(verb("hdfs://nn/lake").contains("local-only"))
+  }
 }

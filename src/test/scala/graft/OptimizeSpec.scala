@@ -132,9 +132,9 @@ class OptimizeSpec extends SparkSuite {
     // commit pending) — the documented race window
     val plan = MergeApply.compactionPlan(snap.files, compactFactor = 0.0,
       maxDeltaFiles = 1, maxBuckets = 8)
-    val (fold, split) = MergeApply.runPlan(spark, lake, snap, plan,
+    val c = MergeApply.runPlan(spark, lake, snap, plan,
       snap.batchId, foldBudget = 8, clusterByKey = true)
-    val stranded = (fold.files ++ split.files).map(_.path)
+    val stranded = c.produced.map(_.path)
     assert(stranded.nonEmpty)
 
     // writer B — the double-scheduled job — wins the race for snap.id + 1
@@ -143,13 +143,8 @@ class OptimizeSpec extends SparkSuite {
       .commits >= 1)
 
     // writer A's commit of the same id fails closed on the publish fence
-    val consumed = MergeApply.consumedBy(plan, foldBudget = 8) _
     val ex = intercept[IllegalStateException] {
-      lake.commit(snap.copy(
-        id = snap.id + 1, parentId = snap.id,
-        files = snap.files.filterNot(consumed) ++ fold.files ++ split.files,
-        addedFiles = fold.files ++ split.files,
-        removedPaths = snap.files.filter(consumed).map(_.path)))
+      lake.commit(snap.next(c.produced, c.consumed, snap.metrics))
     }
     assert(ex.getMessage.contains("fenced"))
 
@@ -170,6 +165,20 @@ class OptimizeSpec extends SparkSuite {
     // the losing handle stays usable: a rerun finds nothing to do
     assert(MergeApply.optimize(spark, lake, maxBucketsPerCommit = 8)
       .commits == 0)
+  }
+
+  test("optimize rejects a budget below 1 before touching the lake " +
+    "(budget 0 would re-split the same deltas into width-1 deltas forever)") {
+    val lake = debtLake(tmp("zfeed"), tmp("zlake"), nBuckets = 8,
+      FeedConfig(nEvents = 1000, nKeys = 100, eventsPerFile = 250))
+    val before = lake.latest().get
+    assert(before.files.exists(_.delta), "fixture must carry delta debt")
+    Seq(0, -1).foreach { budget =>
+      val e = intercept[IllegalArgumentException](
+        MergeApply.optimize(spark, lake, maxBucketsPerCommit = budget))
+      assert(e.getMessage.contains("maxBucketsPerCommit must be >= 1"))
+    }
+    assert(lake.latest().get.id == before.id, "a refused optimize must not commit")
   }
 
   test("optimize splits bucket-range deltas wider than the budget, then " +
